@@ -29,7 +29,14 @@ from pyspark.sql.types import ArrayType, FloatType
 
 @runtime_checkable
 class Encoder(Protocol):
-    """Anything that maps a batch of strings to an (n, dim) float matrix."""
+    """Anything that maps a batch of strings to an (n, dim) float matrix.
+
+    ``encode()`` runs in two places: on executors, inside
+    :func:`encoder_udf`, for DataFrame columns (the corpus, appended rows,
+    DataFrame query targets); and on the driver, in one call, for the
+    ``List[str]`` query targets of ``SparkSearcher.search`` /
+    ``range_search`` and the texts of ``cal_sim``. An encoder must work
+    in the driver process as well as in the Python workers."""
 
     #: output dimensionality (validated against probe, like the reference's
     #: dim discovery at faiss_searcher.py:56)

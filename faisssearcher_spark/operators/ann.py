@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from faisssearcher_spark.functions import metrics as M
 from faisssearcher_spark.operators.knn import knn_join
+from faisssearcher_spark.operators.segments import segments_property
 
 brute_force_topk = knn_join
 
@@ -156,20 +157,26 @@ class _ItemsLifecycleMixin:
     next search (one re-encode pass at worst). ``close()`` is terminal —
     it also drops the state reference, so a closed index raises the
     existing not-fitted guard instead of silently re-encoding a 100 TB
-    corpus nobody asked for."""
+    corpus nobody asked for.
 
-    _items: "DataFrame | None"
+    The encoded rows live in :class:`~.segments.Segments`: ``fit`` sets
+    the base segment and ``add_items`` appends one, so an append codes
+    only its new rows."""
+
+    _segments = None
+    _items = segments_property(
+        "_segments", "The fitted rows: the union of the cached segments.")
 
     def _cached_state(self):
         """The frames this index pins in executor storage — the generic
         hook the bench memo re-registers after a session clearCache()
         and close() releases (BM25Index/SparkSearcher implement the same
         protocol over their own state frames)."""
-        return [] if self._items is None else [self._items]
+        return [] if self._segments is None else self._segments.parts()
 
     def unpersist(self, blocking: bool = False):
-        if self._items is not None:
-            self._items.unpersist(blocking)
+        if self._segments is not None:
+            self._segments.unpersist(blocking)
         return self
 
     def close(self) -> None:
@@ -329,13 +336,9 @@ class IVFIndex(_ItemsLifecycleMixin):
         rows."""
         if self._items is None:
             raise RuntimeError("IVFIndex is not fit; call fit() first")
-        assigned = items.withColumn(
+        self._segments.append(items.withColumn(
             "cell",
-            F.element_at(self._nearest_cells_expr(self._item_vec, 1), 1))
-        old = self._items
-        self._items = old.unionByName(
-            assigned.select(*old.columns)).cache()
-        old.unpersist()
+            F.element_at(self._nearest_cells_expr(self._item_vec, 1), 1)))
         return self
 
     def search(self, queries: DataFrame, *, k: int = 10,
@@ -857,10 +860,8 @@ class PQIndex(_ItemsLifecycleMixin):
         encode pass over the new rows; metadata-only union."""
         if self._items is None:
             raise RuntimeError("PQIndex is not fit; call fit() first")
-        coded = items.withColumn("__codes", self._codes_expr(self._vec_col))
-        old = self._items
-        self._items = old.unionByName(coded.select(*old.columns)).cache()
-        old.unpersist()
+        self._segments.append(
+            items.withColumn("__codes", self._codes_expr(self._vec_col)))
         return self
 
     # -- ADC search --------------------------------------------------------
@@ -1098,10 +1099,8 @@ class SQIndex(_ItemsLifecycleMixin):
     def add_items(self, items: DataFrame) -> "SQIndex":
         if self._items is None:
             raise RuntimeError("SQIndex is not fit; call fit() first")
-        coded = items.withColumn("__codes", self._codes_expr(self._vec_col))
-        old = self._items
-        self._items = old.unionByName(coded.select(*old.columns)).cache()
-        old.unpersist()
+        self._segments.append(
+            items.withColumn("__codes", self._codes_expr(self._vec_col)))
         return self
 
     def search(self, queries: DataFrame, *, k: int = 10,
@@ -1353,11 +1352,8 @@ class IVFPQIndex(_ItemsLifecycleMixin):
             "cell",
             F.element_at(
                 self._ivf._nearest_cells_expr(self._vec_col, 1), 1))
-        coded = assigned.withColumn(
-            "__codes", self._residual_codes_expr(self._vec_col, "cell"))
-        old = self._items
-        self._items = old.unionByName(coded.select(*old.columns)).cache()
-        old.unpersist()
+        self._segments.append(assigned.withColumn(
+            "__codes", self._residual_codes_expr(self._vec_col, "cell")))
         return self
 
     def search(self, queries: DataFrame, *, k: int = 10,

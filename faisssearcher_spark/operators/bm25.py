@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from faisssearcher_spark.functions import text as T
 from faisssearcher_spark.operators.ann import _rank_topk
+from faisssearcher_spark.operators.segments import segments_property
 
 
 class BM25Index:
@@ -42,6 +43,11 @@ class BM25Index:
     sharing no term with the query are absent from the result (standard
     BM25 — there is no evidence to score them on).
     """
+
+    _segments = None
+    _postings = segments_property(
+        "_segments", "The (token, doc, weight) postings: the fit-time "
+        "postings plus the cached add_items segments (operators/segments).")
 
     def __init__(self, k1: float = 1.2, b: float = 0.75, *,
                  max_df_ratio: float | None = None, min_df: int = 1):
@@ -137,9 +143,7 @@ class BM25Index:
                       / (F.col("__tf")
                          + k1 * (1.0 - b + b * F.col("__dl") / avgdl)))
                      .alias("__w")))
-        old = self._postings
-        self._postings = old.unionByName(w).cache()
-        old.unpersist()
+        self._segments.append(w)
         self._docs = self._docs.unionByName(docs.select(*self._docs.columns))
         return self
 
@@ -183,7 +187,8 @@ class BM25Index:
     def _cached_state(self):
         """The frames this index pins in executor storage (lifecycle
         protocol hook shared with the ANN family)."""
-        return [f for f in (self._idf, self._postings) if f is not None]
+        postings = [] if self._segments is None else self._segments.parts()
+        return ([] if self._idf is None else [self._idf]) + postings
 
     def unpersist(self, blocking: bool = False) -> "BM25Index":
         """Release the cached postings/idf back to executor storage. The

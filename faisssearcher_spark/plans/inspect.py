@@ -18,6 +18,29 @@ def executed_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def python_stages(df: DataFrame) -> int:
+    """Number of nodes in the executed plan that run Python workers:
+    every exec node of Spark's ``execution.python`` package
+    (ArrowEvalPython, BatchEvalPython, MapInPandas, FlatMapGroupsInPandas,
+    ...) and every scan of an RDD whose lineage holds a PythonRDD (a
+    DataFrame created from a local Python list). Plans read from a cache
+    are not counted: an InMemoryTableScan is a leaf here, so the Python
+    stages that built a cached frame do not run again."""
+    def walk(node) -> int:
+        cls = node.getClass().getName()
+        if cls.endswith(".AdaptiveSparkPlanExec"):
+            return walk(node.executedPlan())
+        if cls.endswith("QueryStageExec"):
+            return walk(node.plan())
+        own = int(cls.startswith("org.apache.spark.sql.execution.python.")
+                  or (cls.endswith(".RDDScanExec")
+                      and "PythonRDD" in node.rdd().toDebugString()))
+        kids = node.children()
+        return own + sum(walk(kids.apply(i)) for i in range(kids.size()))
+
+    return walk(df._jdf.queryExecution().executedPlan())
+
+
 def has_window_group_limit(df: DataFrame) -> bool:
     """True when Catalyst inserted a WindowGroupLimit (partial per-partition
     top-k below the exchange) — the scalable rank≤k plan."""

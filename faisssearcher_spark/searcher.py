@@ -14,8 +14,12 @@ constructor keeps the reference's two modes:
    (``vec_col`` + ``key_col``) instead of positional alignment.
 
 ``train()`` materializes the encoded/normalized corpus (the analog of FAISS
-train+add, faiss_searcher.py:116-125); ``search()`` answers batched top-K
-queries (faiss_searcher.py:161-187) including the multi-K dict form;
+train+add, faiss_searcher.py:116-125); ``add_items()`` appends encoded
+segments to it (FAISS ``index.add``, faiss_searcher.py:124);
+``search()`` answers batched top-K queries (faiss_searcher.py:161-187)
+including the multi-K dict form — a ``List[str]`` target is encoded on the
+driver in one ``encode`` call, as the reference's ``get_vecs`` does
+(faiss_searcher.py:161-168), so the query side runs no Python worker;
 ``cal_sim()`` is exact pairwise scoring (faiss_searcher.py:192-198);
 ``save()``/``load()`` replace whole-object pickling (faiss_searcher.py:
 200-208) with Parquet + JSON metadata ("a searcher is data + config").
@@ -28,6 +32,8 @@ import os
 import re
 from typing import Any, Iterable, Mapping, Sequence, Union
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -36,12 +42,18 @@ from faisssearcher_spark.functions import metrics as M
 from faisssearcher_spark.functions.vector import (
     l2_normalize, to_float32, validate_vectors)
 from faisssearcher_spark.operators.knn import knn_join, knn_join_multi_k, cal_sim
+from faisssearcher_spark.operators.segments import segments_property
 from faisssearcher_spark.operators.whitening import VecsWhitening
 
 _VEC = "__vec"
 
 
 class SparkSearcher:
+    _corpus_segments = None
+    corpus = segments_property(
+        "_corpus_segments", "The encoded corpus: the train-time frame plus "
+        "the cached add_items segments (operators/segments.py).")
+
     def __init__(
         self,
         items: DataFrame,
@@ -142,6 +154,11 @@ class SparkSearcher:
             out = df.withColumn(_VEC, udf(F.col(text_col)))
         else:
             out = df.withColumn(_VEC, F.col(vec_col))
+        return self._finish_vectors(out)
+
+    def _finish_vectors(self, out: DataFrame) -> DataFrame:
+        """Whitening, normalization and float32 storage of ``_VEC`` — the
+        steps after the encoder, shared by every encode path."""
         if self.whitening is not None:
             out = out.withColumn(_VEC, self.whitening.transform_expr(_VEC))
         if self.norm_vec:
@@ -149,6 +166,23 @@ class SparkSearcher:
         # float32 storage parity (faiss_searcher.py:92-94); metric math
         # re-promotes to float64.
         return out.withColumn(_VEC, to_float32(_VEC))
+
+    def _encode_on_driver(self, spark: SparkSession, texts: list[str],
+                          key_col: str) -> DataFrame:
+        """``texts`` encoded with ONE driver-side ``encoder.encode`` call
+        (the reference's in-process get_vecs, faiss_searcher.py:63-73),
+        as a ``(key_col, _VEC)`` frame built from an Arrow table: Spark
+        plans it as a local table scan, so no Python worker runs."""
+        mat = np.asarray(self.encoder.encode(texts) if texts
+                         else np.zeros((0, 0)), dtype=np.float32)
+        if mat.ndim != 2:   # the check encoder_udf makes per batch
+            raise ValueError(f"encoder returned shape {mat.shape}, "
+                             "want (n, dim)")
+        n, dim = mat.shape
+        offsets = pa.array(np.arange(n + 1, dtype=np.int32) * dim)
+        vecs = pa.ListArray.from_arrays(offsets, pa.array(mat.ravel()))
+        return spark.createDataFrame(pa.table(
+            {key_col: pa.array(texts, pa.string()), _VEC: vecs}))
 
     # -- train (faiss_searcher.py:116-125) ------------------------------------
 
@@ -210,26 +244,29 @@ class SparkSearcher:
     def add_items(self, items: DataFrame, validate: bool = False) -> "SparkSearcher":
         """Append new items to a trained corpus — the analog of FAISS
         ``index.add`` after training (faiss_searcher.py:124). New rows go
-        through the identical encode/whiten/normalize pipeline and union
-        with the cached corpus; at cluster scale this is a metadata-only
-        union (no reshuffle — both sides keep their partitioning), so
-        incremental ingest costs only the encoding of the new rows."""
+        through the identical encode/whiten/normalize pipeline into one
+        cached segment; the corpus already cached stays as it is
+        (operators/segments.py), so incremental ingest costs only the
+        encoding of the new rows, once each. ``validate`` checks the new
+        rows only. The call itself runs no Spark job unless it folds
+        segments or validates."""
         corpus = self._require_trained()
-        new = self._vectorize(items, self.item_col, self.vec_col)
-        new = new.select(*corpus.columns)
-        self.items = self.items.unionByName(items)
-        self.corpus = corpus.unionByName(new).cache()
-        # release the superseded cache — repeated appends must not pin
-        # every intermediate corpus in executor storage (the union
-        # recomputes its lineage on next materialization, which is the
-        # encode cost of the new rows only at worst).
-        corpus.unpersist()
+        seg = self._vectorize(items, self.item_col, self.vec_col) \
+            .select(*corpus.columns).cache()
         if validate:
-            self.vec_dim = validate_vectors(self.corpus, _VEC, self.vec_dim)
+            try:
+                self.vec_dim = validate_vectors(seg, _VEC, self.vec_dim)
+            except ValueError:
+                seg.unpersist()
+                raise
         if self._index is not None:
             # FAISS add-after-train parity: the index ingests the new rows
-            # without retraining its quantizer (operators/ann.py add_items)
-            self._index.add_items(new)
+            # without retraining its quantizer (operators/ann.py
+            # add_items). It codes them from this cache, so it goes
+            # before the corpus segments fold and release it.
+            self._index.add_items(seg)
+        self._corpus_segments.append(seg)
+        self.items = self.items.unionByName(items)
         return self
 
     def _require_trained(self) -> DataFrame:
@@ -344,15 +381,20 @@ class SparkSearcher:
         return out
 
     def _prepare_queries(self, target, corpus: DataFrame) -> DataFrame:
-        """Shared query prep for search()/range_search(): List[str]
-        targets become a DataFrame (queries are data, not driver-side
-        state — the reference's primary form), the encoder/raw-vector
-        branch picks the text column, and the encoded frame reduces to
-        ``(source_item, _VEC)``."""
+        """Shared query prep for search()/range_search(), reduced to
+        ``(source_item, _VEC)``. A List[str] target in encoder mode is
+        encoded on the driver (the reference's form, faiss_searcher.py:
+        161-168) and enters the plan as a local table; a DataFrame
+        target is encoded by the executor UDF from its item column (or
+        first column), and raw-vector mode reads ``vec_col``."""
         spark = corpus.sparkSession
         if not isinstance(target, DataFrame):
+            texts = [str(t) for t in target]
+            if self.encoder is not None:
+                return self._finish_vectors(
+                    self._encode_on_driver(spark, texts, "source_item"))
             target = spark.createDataFrame(
-                [(str(t),) for t in target], "source_item string")
+                [(t,) for t in texts], "source_item string")
             q_text, q_vec = "source_item", None
         elif self.encoder is not None:
             q_text, q_vec = (self.item_col
@@ -434,21 +476,20 @@ class SparkSearcher:
         if self.encoder is None:
             raise RuntimeError("cal_sim requires an encoder (reference "
                                "contract: faiss_searcher.py:193-194)")
-        corpus = self.items if isinstance(items2, DataFrame) else None
-        spark = (corpus or self.items).sparkSession
-        if corpus is None:
-            items2 = spark.createDataFrame(
-                [(str(t),) for t in items2], "item string")
-            cand_text = "item"
-        else:
-            items2 = items2
-            cand_text = self.item_col
-        query = spark.createDataFrame([(str(item1),)], "q string")
+        spark = self.items.sparkSession
+        # texts are encoded on the driver (one encode call each side);
+        # a DataFrame candidate set is encoded by the executor UDF.
         # NOTE: raw dot product, not normalized — preserved reference wrinkle
         # (faiss_searcher.py:195); vectors here bypass norm_vec deliberately.
-        udf = encoder_udf(self.encoder)
-        qv = query.withColumn(_VEC, udf(F.col("q")))
-        cv = items2.withColumn(_VEC, udf(F.col(cand_text)))
+        qv = self._encode_on_driver(spark, [str(item1)], "q")
+        if isinstance(items2, DataFrame):
+            cand_text = self.item_col
+            cv = items2.withColumn(
+                _VEC, encoder_udf(self.encoder)(F.col(cand_text)))
+        else:
+            cand_text = "item"
+            cv = self._encode_on_driver(
+                spark, [str(t) for t in items2], cand_text)
         if self.whitening is not None:
             qv = qv.withColumn(_VEC, self.whitening.transform_expr(_VEC))
             cv = cv.withColumn(_VEC, self.whitening.transform_expr(_VEC))
@@ -460,9 +501,10 @@ class SparkSearcher:
 
     def _cached_state(self):
         """The frames this searcher pins in executor storage (lifecycle
-        protocol hook): the encoded corpus plus the inner index's own
-        state when one is composed."""
-        state = [] if self.corpus is None else [self.corpus]
+        protocol hook): the encoded corpus segments plus the inner
+        index's own state when one is composed."""
+        segs = self._corpus_segments
+        state = [] if segs is None else segs.parts()
         if self._index is not None:
             state += self._index._cached_state()
         return state
@@ -471,8 +513,8 @@ class SparkSearcher:
         """Release the cached encoded corpus (and any fitted ANN state)
         back to executor storage. The searcher stays usable — the corpus
         recomputes from its encode lineage on the next search."""
-        if self.corpus is not None:
-            self.corpus.unpersist(blocking)
+        if self._corpus_segments is not None:
+            self._corpus_segments.unpersist(blocking)
         if self._index is not None:
             self._index.unpersist(blocking)
         return self

@@ -39,8 +39,10 @@ _SPLIT_KEYS = {"documents": "doc_id", "embeddings": "vec_id",
 #: (row_groups, num_rows) by path — ONE driver-side footer probe feeds
 #: both the split floor and corpus sizing, cached so query-builder
 #: loops don't re-open footers (review catch: two line-for-line probe
-#: copies parsed the same footers twice per process)
-_FOOTER_CACHE: dict[str, "tuple[int, int]"] = {}
+#: copies parsed the same footers twice per process). A failed probe is
+#: cached as None, so storage pyarrow cannot read is listed once per
+#: process, not once per sizing call.
+_FOOTER_CACHE: dict[str, "tuple[int, int] | None"] = {}
 
 
 def _parquet_footer_totals(path: str) -> "tuple[int, int] | None":
@@ -56,10 +58,11 @@ def _parquet_footer_totals(path: str) -> "tuple[int, int] | None":
         for frag in ds.dataset(path, format="parquet").get_fragments():
             groups += frag.metadata.num_row_groups
             rows += frag.metadata.num_rows
+        totals = (groups, rows)
     except Exception:
-        return None
-    _FOOTER_CACHE[path] = (groups, rows)
-    return groups, rows
+        totals = None
+    _FOOTER_CACHE[path] = totals
+    return totals
 
 
 def _parquet_row_groups(path: str) -> "int | None":

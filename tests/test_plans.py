@@ -40,8 +40,7 @@ class TestKnnPlan:
         assert inspect.has_broadcast_join(knn_plan_df)
 
     def test_no_python_on_scoring_path(self, knn_plan_df):
-        plan = inspect.executed_plan(knn_plan_df)
-        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+        assert inspect.python_stages(knn_plan_df) == 0
 
 
 class TestScanPruning:
@@ -232,11 +231,12 @@ class TestSpanRemovalPlan:
         — and the whole plan must stay JVM-side with no pair blowup."""
         from faisssearcher_spark.operators.dedup import remove_duplicate_spans
 
-        plan = inspect.executed_plan(remove_duplicate_spans(documents, n=5))
+        df = remove_duplicate_spans(documents, n=5)
+        plan = inspect.executed_plan(df)
         assert "ShuffledHashJoin" in plan
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
-        assert "ArrowEvalPython" not in plan
+        assert inspect.python_stages(df) == 0
         # ALL three joins (recovery, anti, rebuild) descend from the tiny
         # pre-explode estimate — none may statically broadcast
         assert "BroadcastHashJoin" not in plan
@@ -254,13 +254,13 @@ class TestExactSubstrPlan:
         from faisssearcher_spark.operators.dedup import \
             remove_exact_substrings
 
-        plan = inspect.executed_plan(
-            remove_exact_substrings(documents, min_len=5))
+        df = remove_exact_substrings(documents, min_len=5)
+        plan = inspect.executed_plan(df)
         assert "ShuffledHashJoin" in plan
         assert "Window" in plan
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
-        assert "ArrowEvalPython" not in plan
+        assert inspect.python_stages(df) == 0
         assert "BroadcastHashJoin" not in plan
 
 
@@ -274,12 +274,12 @@ class TestBoilerplatePlan:
         call — not asserted either way)."""
         from faisssearcher_spark.operators.dedup import remove_boilerplate
 
-        plan = inspect.executed_plan(
-            remove_boilerplate(documents, n=5, min_docs=2))
+        df = remove_boilerplate(documents, n=5, min_docs=2)
+        plan = inspect.executed_plan(df)
         assert "ShuffledHashJoin" in plan
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
-        assert "ArrowEvalPython" not in plan
+        assert inspect.python_stages(df) == 0
 
 
 class TestVideoNearDupPlan:
@@ -339,10 +339,11 @@ class TestSketchPlans:
 
         toks = documents.select(
             F.explode(F.split(F.trim("text"), r"\s+")).alias("tok"))
-        plan = inspect.executed_plan(cms_table(toks, "tok"))
+        df = cms_table(toks, "tok")
+        plan = inspect.executed_plan(df)
         assert "partial_count" in plan
         assert "Join" not in plan
-        assert "ArrowEvalPython" not in plan
+        assert inspect.python_stages(df) == 0
 
 
 class TestSessionFourPlans:
@@ -364,10 +365,10 @@ class TestSessionFourPlans:
             resample_fill_forward
 
         ev = load_table(spark, "/root/testdata/sf0.001", "events")
-        plan = inspect.executed_plan(
-            resample_fill_forward(ev, step_s=86400))
+        df = resample_fill_forward(ev, step_s=86400)
+        plan = inspect.executed_plan(df)
         assert "CartesianProduct" not in plan
-        assert "ArrowEvalPython" not in plan
+        assert inspect.python_stages(df) == 0
         assert "partial_" in plan     # bucket agg combines map-side
 
     def test_decayed_sum_single_window_shuffle(self, spark):
@@ -376,13 +377,13 @@ class TestSessionFourPlans:
         from faisssearcher_spark.operators.temporal import decayed_sum
 
         ev = load_table(spark, "/root/testdata/sf0.001", "events")
-        plan = inspect.executed_plan(
-            decayed_sum(ev, key_col="user_id", ts_col="ts",
-                        value_col="value", half_life_s=86400.0,
-                        order_col="event_id"))
+        df = decayed_sum(ev, key_col="user_id", ts_col="ts",
+                         value_col="value", half_life_s=86400.0,
+                         order_col="event_id")
+        plan = inspect.executed_plan(df)
         assert plan.count("Exchange hashpartitioning(user_id") <= 2
         assert "CartesianProduct" not in plan
-        assert "ArrowEvalPython" not in plan
+        assert inspect.python_stages(df) == 0
 
 
 class TestRetrievalEvalPlan:
@@ -402,9 +403,8 @@ class TestRetrievalEvalPlan:
         truth = knn_join(q, embeddings, metric="cos", k=3,
                          query_item_col="qid", item_key_col="vec_id",
                          payload_cols=[])
-        plan = inspect.executed_plan(
-            evaluation.retrieval_metrics(res, truth, k=5))
+        df = evaluation.retrieval_metrics(res, truth, k=5)
+        plan = inspect.executed_plan(df)
         assert "WindowGroupLimit" in plan
         assert "CartesianProduct" not in plan
-        assert "ArrowEvalPython" not in plan
-        assert "BatchEvalPython" not in plan
+        assert inspect.python_stages(df) == 0

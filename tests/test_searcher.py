@@ -1,11 +1,53 @@
 """SparkSearcher facade: reference API parity (modes, result shapes,
 feature-sep splits, persistence) — SURVEY.md §3."""
 
+import math
+from collections import Counter
+
+import pyarrow as pa
 import pytest
+from pyspark.accumulators import AccumulatorParam
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from faisssearcher_spark.encoders import HashingEncoder
+from faisssearcher_spark.encoders import HashingEncoder, encoder_udf
+from faisssearcher_spark.operators.knn import cal_sim
+from faisssearcher_spark.plans.inspect import python_stages
 from faisssearcher_spark.searcher import SparkSearcher
+
+
+class _CounterParam(AccumulatorParam):
+    def zero(self, value):
+        return Counter()
+
+    def addInPlace(self, a, b):
+        a.update(b)
+        return a
+
+
+class _CountingEncoder(HashingEncoder):
+    """HashingEncoder that counts every text it encodes, on the driver
+    and in the workers, into a Counter accumulator."""
+
+    def __init__(self, counts):
+        super().__init__(dim=8)
+        self.counts = counts
+
+    def encode(self, items, verbose: int = 0):
+        texts = [str(t) for t in items]
+        self.counts.add(Counter(texts))
+        return super().encode(texts)
+
+
+def _texts(spark, prefix: str, n: int):
+    return spark.createDataFrame(pa.table({
+        "text": [f"{prefix} row {i}" for i in range(n)],
+        "i": pa.array(range(n), pa.int32())}))
+
+
+def _cached_rdd_ids(spark) -> set:
+    return {info.id() for info in
+            spark.sparkContext._jsc.sc().getRDDStorageInfo()}
 
 
 @pytest.fixture(scope="module")
@@ -88,6 +130,120 @@ class TestEncoderMode:
                           encoder=HashingEncoder(dim=4))
         with pytest.raises(RuntimeError, match="train"):
             s.search(["x"], 1)
+
+
+class TestDriverEncodedQueries:
+    """A List[str] target is encoded on the driver in one encode call and
+    must answer exactly like the same texts passed as a DataFrame target,
+    which the executor UDF encodes."""
+
+    QUERIES = ["spark join merge##q1", "filter scan row##q2",
+               "the big data##q3"]
+
+    @pytest.fixture(scope="class")
+    def corpus(self, documents):
+        return documents.filter(F.col("doc_id") < 80).select(
+            F.concat("text", F.lit("##d"),
+                     F.col("doc_id").cast("string")).alias("text"), "lang")
+
+    @staticmethod
+    def _rows(res):
+        if isinstance(res, DataFrame):
+            return sorted(map(tuple, res.collect()))
+        return {k: sorted(map(tuple, v.collect())) for k, v in res.items()}
+
+    def _both(self, spark, call, texts=QUERIES):
+        frame = spark.createDataFrame([(t,) for t in texts], "text string")
+        return self._rows(call(list(texts))), self._rows(call(frame))
+
+    @pytest.mark.parametrize("measurement", ["cos", "ip", "l2"])
+    def test_search_matches_dataframe_target(self, spark, corpus,
+                                             measurement):
+        s = SparkSearcher(corpus, encoder=HashingEncoder(dim=8),
+                          measurement=measurement).train()
+        got, want = self._both(spark, lambda t: s.search(
+            t, topK=3, keep_rank_no=True))
+        assert got == want and len(got) == 9
+
+    def test_whitening_feature_seps_and_multi_k(self, spark, corpus):
+        from faisssearcher_spark.operators.whitening import VecsWhitening
+
+        vecs = corpus.select(HashingEncoder(dim=8).spark_expr("text")
+                             .alias("v"))
+        s = SparkSearcher(corpus, encoder=HashingEncoder(dim=8),
+                          whitening=VecsWhitening(6).fit(vecs, "v"),
+                          query_feature_sep="##",
+                          doc_feature_sep="##").train()
+        got, want = self._both(spark, lambda t: s.search(
+            t, topK=[1, 3], keep_rank_no=True))
+        assert got == want and sorted(got) == [1, 3]
+        assert all("##" not in r[0] and "##" not in r[1] for r in got[3])
+
+    def test_range_search_matches_dataframe_target(self, spark, corpus):
+        s = SparkSearcher(corpus, encoder=HashingEncoder(dim=8)).train()
+        got, want = self._both(spark, lambda t: s.range_search(t, 0.3))
+        assert got == want and got
+        got, want = self._both(spark, lambda t: s.range_search(
+            t, [0.2, 0.4], score_scale=4))
+        assert got == want and sorted(got) == [0.2, 0.4] and got[0.4]
+
+    def test_empty_list(self, spark, corpus):
+        s = SparkSearcher(corpus, encoder=HashingEncoder(dim=8)).train()
+        got, want = self._both(spark, lambda t: s.search(t, topK=3), [])
+        assert got == want == []
+
+    def test_list_queries_run_no_python(self, spark, corpus):
+        """The encoded query frame is a local table: no Python eval node
+        and no Python-RDD scan. The DataFrame target keeps its UDF."""
+        s = SparkSearcher(corpus, encoder=HashingEncoder(dim=8)).train()
+        assert python_stages(s._prepare_queries(self.QUERIES, s.corpus)) == 0
+        assert python_stages(s.search(self.QUERIES, topK=3)) == 0
+        frame = spark.createDataFrame([(t,) for t in self.QUERIES],
+                                      "text string")
+        assert python_stages(s._prepare_queries(frame, s.corpus)) == 2
+
+
+def _udf_cal_sim(s, item1, items2):
+    """cal_sim with every text encoded by the executor UDF — the form
+    the driver-side encode must reproduce."""
+    spark = s.items.sparkSession
+    udf = encoder_udf(s.encoder)
+    if isinstance(items2, DataFrame):
+        key = s.item_col
+    else:
+        key = "item"
+        items2 = spark.createDataFrame([(t,) for t in items2], "item string")
+    qv = spark.createDataFrame([(item1,)], "q string") \
+        .withColumn("__vec", udf(F.col("q")))
+    cv = items2.withColumn("__vec", udf(F.col(key)))
+    if s.whitening is not None:
+        qv = qv.withColumn("__vec", s.whitening.transform_expr("__vec"))
+        cv = cv.withColumn("__vec", s.whitening.transform_expr("__vec"))
+    return cal_sim(qv, cv, query_vec_col="__vec", cand_vec_col="__vec",
+                   cand_key_col=key).withColumnRenamed(key, "item")
+
+
+class TestCalSimParity:
+    @pytest.mark.parametrize("whitened", [False, True])
+    def test_list_and_dataframe_candidates(self, spark, documents,
+                                           whitened):
+        from faisssearcher_spark.operators.whitening import VecsWhitening
+
+        corpus = documents.filter(F.col("doc_id") < 40).select(
+            "text", "lang")
+        wh = (VecsWhitening(4).fit(corpus.select(
+            HashingEncoder(dim=8).spark_expr("text").alias("v")), "v")
+            if whitened else None)
+        s = SparkSearcher(corpus, encoder=HashingEncoder(dim=8),
+                          measurement="cos", whitening=wh).train()
+        texts = [r["text"] for r in corpus.limit(6).collect()]
+        for items2 in (texts + ["spark join"], corpus.limit(12)):
+            got = s.cal_sim("spark join merge", items2)
+            want = _udf_cal_sim(s, "spark join merge", items2)
+            assert got.columns == want.columns
+            assert got.collect() == want.collect()
+        assert python_stages(s.cal_sim("spark join", texts)) == \
+            (2 if whitened else 0)
 
 
 class TestFeatureSep:
@@ -204,17 +360,65 @@ class TestAddItems:
         with pytest.raises(RuntimeError):
             s.add_items(documents.select("text"))
 
-    def test_add_items_unpersists_superseded_corpus(self, spark, documents):
-        """r1/r2 ADVICE: repeated appends must not pin every intermediate
-        corpus in executor storage."""
-        corpus = documents.select("text", "lang")
-        s = SparkSearcher(corpus.limit(20), encoder=HashingEncoder(dim=8),
-                          measurement="cos").train(validate=False)
-        old = s.corpus
-        assert old.storageLevel.useMemory
-        s.add_items(corpus.limit(30).subtract(corpus.limit(20)))
-        assert not old.storageLevel.useMemory  # superseded cache released
-        assert s.corpus.storageLevel.useMemory
+    def test_add_items_caches_each_encoded_row_once(self, spark):
+        """Appends keep the corpus cached as it is: 64 appends encode every
+        row exactly once, leave O(log n) cached segments and no other
+        cache (no row is cached twice), and close() releases them all."""
+        counts = spark.sparkContext.accumulator(Counter(), _CounterParam())
+        before = _cached_rdd_ids(spark)
+        s = SparkSearcher(_texts(spark, "base", 20),
+                          encoder=_CountingEncoder(counts),
+                          measurement="cos").train()
+        for n in range(1, 65):
+            s.add_items(_texts(spark, f"add{n}", 1 + n % 3))
+            segments = s._cached_state()
+            assert len(segments) - 1 <= math.log2(n) + 1, n
+        want = {r["text"] for r in s.corpus.collect()}
+        assert len(want) == 20 + sum(1 + n % 3 for n in range(1, 65))
+        top = s.search(["add64 row 1"], topK=1).collect()[0]
+        assert (top["sim_item"], top["sim_val"]) == \
+            ("add64 row 1", pytest.approx(1.0, abs=1e-6))
+        # each corpus row once, plus the query text once on the driver
+        assert counts.value == Counter(want) + Counter(["add64 row 1"])
+        assert len(_cached_rdd_ids(spark) - before) == len(segments)
+        s.close()
+        assert not _cached_rdd_ids(spark) - before
+
+    def test_indexed_add_items_codes_each_row_once(self, spark):
+        """The index codes appended rows from the searcher's segment
+        cache: the encoder still sees every row once, and close()
+        releases the corpus and index segments."""
+        counts = spark.sparkContext.accumulator(Counter(), _CounterParam())
+        before = _cached_rdd_ids(spark)
+        s = SparkSearcher(_texts(spark, "base", 40),
+                          encoder=_CountingEncoder(counts),
+                          measurement="cos", index_param="IVF2",
+                          index_kwargs={"nprobe": 2,
+                                        "train_mode": "sample"}).train()
+        for n in range(1, 7):
+            s.add_items(_texts(spark, f"add{n}", 2))
+        top = s.search(["add6 row 1"], topK=1).collect()[0]
+        assert top["sim_item"] == "add6 row 1"
+        want = {r["text"] for r in s.corpus.collect()}
+        assert counts.value == Counter(want) + Counter(["add6 row 1"])
+        s.close()
+        assert not _cached_rdd_ids(spark) - before
+
+    def test_validate_checks_the_new_segment(self, spark):
+        """add_items(validate=True) checks the new rows against the
+        trained dimension; a rejected append leaves the corpus as it
+        was."""
+        def vecs(keys, rows):
+            return spark.createDataFrame(pa.table({
+                "k": keys, "v": pa.array(rows, pa.list_(pa.float32()))}))
+
+        s = SparkSearcher(vecs(["a", "b"], [[1, 0], [0, 1]]),
+                          vec_col="v", key_col="k").train()
+        with pytest.raises(ValueError, match="expected dim 2"):
+            s.add_items(vecs(["c"], [[1, 1, 1]]), validate=True)
+        assert s.corpus.count() == 2 and len(s._cached_state()) == 1
+        s.add_items(vecs(["d"], [[1, 1]]), validate=True)
+        assert sorted(r["k"] for r in s.corpus.collect()) == ["a", "b", "d"]
 
 
 class TestCombinedKwargs:

@@ -23,6 +23,25 @@ class TestCatalog:
         catalog.register_views(spark, sf_dir)
         assert spark.sql("SELECT count(*) AS n FROM region").first()["n"] > 0
 
+    def test_failed_footer_probe_runs_once(self, monkeypatch):
+        """Storage pyarrow cannot read is probed once per process: the
+        failure is memoized like a success."""
+        import pyarrow.dataset as ds
+
+        calls = []
+
+        def unreadable(*args, **kwargs):
+            calls.append(args)
+            raise OSError("unreadable storage")
+
+        monkeypatch.setattr(ds, "dataset", unreadable)
+        monkeypatch.setattr(catalog, "_FOOTER_CACHE", {})
+        path = "unreadable://bucket/table.parquet"
+        for _ in range(3):
+            assert catalog.parquet_num_rows(path) is None
+            assert catalog._parquet_row_groups(path) is None
+        assert len(calls) == 1
+
 
 class TestCorpusReaders:
     @pytest.fixture(scope="class")

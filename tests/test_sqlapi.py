@@ -145,8 +145,7 @@ class TestSqlFunctionParity:
     def test_no_python_in_plan(self, spark, pairs):
         """SQL functions resolve to Catalyst expressions — no
         Arrow/Python eval node may appear."""
-        plan = spark.sql(
-            "SELECT fs_cos(va, vb) AS v FROM __sql_pairs")._jdf \
-            .queryExecution().executedPlan().toString()
-        assert "ArrowEvalPython" not in plan
-        assert "BatchEvalPython" not in plan
+        from faisssearcher_spark.plans.inspect import python_stages
+
+        df = spark.sql("SELECT fs_cos(va, vb) AS v FROM __sql_pairs")
+        assert python_stages(df) == 0
